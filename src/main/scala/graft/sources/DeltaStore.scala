@@ -5,28 +5,29 @@ import org.apache.spark.sql.functions._
 
 /** APPEND-DELTA persistence for maintained index stores — the
   * merge-on-read segment layout (Iceberg/Delta MOR, LSM levels) that makes
-  * the WRITE side of index maintenance O(Δ) instead of O(index).
+  * the WRITE side of index maintenance O(Δ) instead of O(index):
   *
-  * The r14 write-back cycles proved maintenance COMPUTE and EMISSION are
-  * O(Δ), but every cycle still persisted its maintained artifact with a
-  * full `overwrite.saveAsTable` — O(index) write I/O per cycle (measured
-  * at the 100× tier: the graph cycle's cold write-back was 1,266 s vs a
-  * 34 s warm pass; at 100 TB an index rewrite per maintenance batch is
-  * disqualifying). This module replaces that shape:
-  *
-  *   - the BASE segment is written once at ingest (bucketed — the
-  *     existing store layout, `Stores.ensureBucketed`);
+  *   - the BASE segment is a bucketed [[Stores]] table, written once at
+  *     ingest;
   *   - each maintenance cycle appends ONE delta segment: an upsert table
   *     (full payload rows for every touched primary key) plus a tombstone
   *     table (pk columns of retired keys) — both O(Δ) rows, O(Δ) bytes;
-  *   - readers consume the UNION VIEW [[merged]]: per-pk latest-wins,
-  *     folded newest-last. Deltas are tiny by contract (the bounded-batch
-  *     class every maintenance rung already assumes), so they ride
-  *     broadcast anti-joins and the bucketed base scan NEVER re-shuffles;
+  *   - readers consume the UNION VIEW [[merged]]: per-pk latest-wins.
+  *     Deltas are tiny by contract (the bounded-batch class every
+  *     maintenance rung already assumes), so they ride broadcast joins and
+  *     the bucketed base scan NEVER re-shuffles;
   *   - [[compact]] is the OPTIMIZE job: fold base + segments into a fresh
-  *     bucketed base and retire the segments — run on a cadence, not per
-  *     cycle (the planning analog of operators/Compaction.compactionPlan,
-  *     which bins small files; here the bins are whole segments).
+  *     bucketed base — run on a cadence, not per cycle (the planning
+  *     analog of operators/Compaction.compactionPlan, which bins small
+  *     files; here the bins are whole segments).
+  *
+  * Every segment table is written through Stores.catalogOrBuild. A
+  * single-artifact family is one call to the cycle driver [[cycles]]: given
+  * the base and a segment function (cycle, previous merged view) ⇒
+  * (upserts, tombstones), it writes each missing cycle in order and
+  * returns the merged view. Families that write several artifacts per
+  * cycle from one maintenance pass (resolve) or additive counters (BM25)
+  * script [[writeCycle]] / [[writeAdditive]] directly.
   *
   * Upsert semantics are WHOLESALE per pk: a delta's upsert table must
   * carry the COMPLETE new row-set of every pk it touches (one row for
@@ -38,70 +39,71 @@ import org.apache.spark.sql.functions._
   *
   * Segment identity: (store name, sf dir, cycle number) — deterministic
   * pure functions of the corpus snapshot, like every other store, so a
-  * rebuild can never change values and the catalog-or-build lifecycle is
-  * shared with Stores.
+  * rebuild can never change values.
   */
 object DeltaStore {
 
   private def uTable(name: String, d: String, cycle: Int): String =
-    s"graft_store_${name}_u${cycle}_${Stores.tag(d)}"
+    Stores.tableName(s"${name}_u$cycle", d)
   private def tTable(name: String, d: String, cycle: Int): String =
-    s"graft_store_${name}_t${cycle}_${Stores.tag(d)}"
+    Stores.tableName(s"${name}_t$cycle", d)
   private def aTable(name: String, d: String, cycle: Int): String =
-    s"graft_store_${name}_a${cycle}_${Stores.tag(d)}"
+    Stores.tableName(s"${name}_a$cycle", d)
+
+  /** Helper columns of the [[merged]] winner resolution. */
+  private val Reserved = Seq("_cyc", "_upc", "_tc")
 
   /** True iff cycle `cycle`'s delta segment is already persisted. */
   def hasCycle(s: SparkSession, name: String, d: String, cycle: Int): Boolean =
     s.catalog.tableExists(uTable(name, d, cycle)) &&
       s.catalog.tableExists(tTable(name, d, cycle))
 
-  /** Persist ONE maintenance cycle's delta segment — the O(Δ) write that
-    * replaces the full-index overwrite. `upserts` carries the complete
-    * new row-set per touched pk; `tombstones` the pk columns of retired
-    * keys. Both land as plain (unbucketed) tables: a delta is broadcast-
-    * sized by the bounded-batch contract, so bucketing buys nothing and
-    * would cost a shuffle. Idempotent per (name, cycle): built once per
-    * corpus snapshot like every ensure*. */
+  /** Persist ONE maintenance cycle's delta segment. `upserts` carries the
+    * complete new row-set per touched pk; `tombstones` the pk columns of
+    * retired keys. Both land as plain (unbucketed) tables: a delta is
+    * broadcast-sized by the bounded-batch contract, so bucketing buys
+    * nothing and would cost a shuffle. Idempotent per (name, cycle). */
   def writeCycle(s: SparkSession, name: String, d: String, cycle: Int,
-                 upserts: => DataFrame, tombstones: => DataFrame): Unit =
-    synchronized {
-      if (!hasCycle(s, name, d, cycle)) {
-        val ut = uTable(name, d, cycle)
-        Stores.dropStaleLocation(s, ut)
-        upserts.write.mode("overwrite").saveAsTable(ut)
-        val tt = tTable(name, d, cycle)
-        Stores.dropStaleLocation(s, tt)
-        tombstones.write.mode("overwrite").saveAsTable(tt)
-      }
+                 upserts: => DataFrame, tombstones: => DataFrame): Unit = {
+    Stores.ensureTable(s, s"${name}_u$cycle", d)(upserts)
+    Stores.ensureTable(s, s"${name}_t$cycle", d)(tombstones)
+  }
+
+  /** THE CYCLE DRIVER of a single-artifact delta store: write every
+    * missing cycle 1..`n` in order — cycle c's segment is
+    * `segment(c, prev)`, where `prev()` builds the merged view after cycle
+    * c−1 (only if the segment function calls it) — and return the merged
+    * view after cycle `n`. A segment with no tombstones (`None`) persists
+    * the empty pk table, so every cycle has both tables. */
+  def cycles(s: SparkSession, name: String, d: String, base: DataFrame,
+             pk: Seq[String], n: Int)
+            (segment: (Int, () => DataFrame) => (DataFrame, Option[DataFrame])): DataFrame = {
+    for (c <- 1 to n if !hasCycle(s, name, d, c)) {
+      val (upserts, tombstones) = segment(c, () => merged(s, name, d, base, pk, c - 1))
+      writeCycle(s, name, d, c, upserts,
+        tombstones.getOrElse(base.select(pk.map(col): _*).filter(lit(false))))
     }
+    merged(s, name, d, base, pk, n)
+  }
 
   /** The MERGE-ON-READ union view over base + delta segments 1..`cycles`:
-    * per-pk latest-wins, folded in CONSTANT plan depth (r15 verdict item
-    * 7: the previous newest-last foldLeft put one anti-join + union on the
-    * base PER SEGMENT — read amplification linear in un-compacted cycles,
-    * visible as ann_ivf_cycle4 ≈ 2.7× ann_ivf_cycle2). The segments are
-    * delta-bounded by contract, so the winner resolution (latest upsert
-    * per pk unless a strictly-later tombstone retired it; a same-cycle
-    * tombstone+upsert resolves to the upsert, matching the old fold order)
-    * runs entirely over tiny segment tables, and the bucketed base pays
-    * exactly ONE broadcast anti-join regardless of segment count — the
-    * base scan still never exchanges, and consuming joins that broadcast
-    * their probe side (the store read-path convention) are unaffected by
-    * the union. */
+    * per-pk latest-wins, in CONSTANT plan depth. The winner resolution
+    * (latest upsert per pk unless a strictly-later tombstone retired it; a
+    * same-cycle tombstone + upsert resolves to the upsert) runs entirely
+    * over the tiny segment tables, and the bucketed base pays exactly ONE
+    * broadcast anti-join regardless of segment count — the base scan
+    * never exchanges, and consuming joins that broadcast their probe side
+    * (the store read-path convention) are unaffected by the union. The
+    * resolution tags rows with the [[Reserved]] columns, so a store
+    * schema that already has one is rejected (it would be overwritten and
+    * corrupt the winners). */
   def merged(s: SparkSession, name: String, d: String, base: DataFrame,
-             pk: Seq[String], cycles: Int): DataFrame =
+             pk: Seq[String], cycles: Int): DataFrame = {
+    val clash = base.columns.filter(c => Reserved.exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty,
+      s"delta store $name: column(s) ${clash.mkString(", ")} are reserved by the merge view")
     if (cycles <= 0) base
-    else if (cycles == 1) {
-      // one segment needs no winner resolution — keep the single-fold
-      // shape (one anti-join + union) instead of paying the multi-segment
-      // machinery's extra broadcast stages on every read
-      val u = s.table(uTable(name, d, 1))
-      val t = s.table(tTable(name, d, 1))
-      val touched = u.select(pk.map(col): _*)
-        .unionByName(t.select(pk.map(col): _*)).distinct()
-      base.join(broadcast(touched), pk, "left_anti")
-        .unionByName(u.select(base.columns.map(col).toSeq: _*))
-    } else {
+    else {
       val pkc = pk.map(col)
       val allU = (1 to cycles).map(i =>
         s.table(uTable(name, d, i)).withColumn("_cyc", lit(i))).reduce(_ unionByName _)
@@ -119,19 +121,17 @@ object DeltaStore {
       val touched = allU.select(pkc: _*).unionByName(allT.select(pkc: _*)).distinct()
       base.join(broadcast(touched), pk, "left_anti").unionByName(winners)
     }
+  }
 
-  /** COMPACTION — the OPTIMIZE job run on a cadence: fold the merged view
-    * back into one fresh bucketed base segment (`name_c`) so read
-    * amplification resets and the segment list empties. Returns the
+  /** COMPACTION — the OPTIMIZE job run on a cadence: persist the merged
+    * `view` after `cycles` cycles as one fresh bucketed base segment
+    * (`name_c<cycles>`) so read amplification resets. Returns the
     * compacted table. The write is O(index) BY DESIGN — that is what
     * compaction is — but it is scheduled (amortized over many cycles),
     * not paid per maintenance batch; the per-cycle write stays O(Δ). */
-  def compact(s: SparkSession, name: String, d: String, base: DataFrame,
-              pk: Seq[String], cycles: Int, bucketKeys: Seq[String],
-              buckets: Int): DataFrame =
-    Stores.ensureBucketed(s, s"${name}_c$cycles", d, bucketKeys, buckets) {
-      merged(s, name, d, base, pk, cycles)
-    }
+  def compact(s: SparkSession, name: String, d: String, cycles: Int,
+              bucketKeys: Seq[String], buckets: Int, view: DataFrame): DataFrame =
+    Stores.ensureBucketed(s, s"${name}_c$cycles", d, bucketKeys, buckets)(view)
 
   // ---- additive stores (counters: per-term df, corpus scalars) -----------
 
@@ -139,13 +139,8 @@ object DeltaStore {
     * stores (a BM25 df row is +1 per arriving doc containing the term,
     * −1 per departing one). O(Δ) write like [[writeCycle]]. */
   def writeAdditive(s: SparkSession, name: String, d: String, cycle: Int,
-                    delta: => DataFrame): Unit = synchronized {
-    val at = aTable(name, d, cycle)
-    if (!s.catalog.tableExists(at)) {
-      Stores.dropStaleLocation(s, at)
-      delta.write.mode("overwrite").saveAsTable(at)
-    }
-  }
+                    delta: => DataFrame): Unit =
+    Stores.ensureTable(s, s"${name}_a$cycle", d)(delta)
 
   /** Merge-on-read for additive stores: union base + signed deltas, sum
     * per key, drop fully-retired keys (all counters zero). `keys` may be
@@ -197,9 +192,7 @@ object DeltaStore {
     * overwrite. */
   def cycleBytes(s: SparkSession, name: String, d: String, cycle: Int): Long =
     Seq(uTable(name, d, cycle), tTable(name, d, cycle)).map { t =>
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val path = new org.apache.hadoop.fs.Path(wh, t.toLowerCase)
-      val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val (fs, path) = Stores.location(s, t)
       if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
     }.sum
 }

@@ -1,9 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cluster, Dedup, GraphOps, MinhashPortable, ProductQuant, ResolveInc, Search}
+import graft.operators.{Cluster, Dedup, GraphAnn, GraphOps, MinhashPortable, ProductQuant, ResolveInc, Search}
+import graft.streaming.Streams
 
 /** PERSISTED standing-state stores — the artifact layer between ingest and
   * query that every index-maintenance operator assumes "in production".
@@ -25,64 +27,72 @@ import graft.operators.{Cluster, Dedup, GraphOps, MinhashPortable, ProductQuant,
   *   - co-purchase labels bucketed by `node`, surviving edges by `src`
   *     → componentsDeleteFrom's touched-scoped recompute never re-shuffles
   *     the standing labeling;
-  *   - LSH band keys bucketed by `(band, bkey)` → the candidate self-join
-  *     runs exchange-free on both sides; signatures bucketed by `doc_id`;
+  *   - LSH signatures and band keys bucketed by `doc_id`;
   *   - BM25 postings bucketed by `term`   → the query-term restriction is a
   *     BUCKET PRUNE (SelectedBucketsCount in the scan), doclens by `doc_id`.
   *
-  * Lifecycle: `ensure*` checks the session catalog and builds on miss — in
-  * this harness (in-memory catalog) that means once per JVM; on a real
-  * deployment the build is the ingest job and the catalog is Hive/Unity,
-  * so queries only ever see the read path. Builders are deterministic pure
-  * functions of the sf-dir inputs, so a rebuild can never change values.
-  * Table names embed the sf dir, keeping sf0.001/sf0.01/sf0.1 (and /tmp
-  * stress tiers) separate. Not safe against two JVMs building the SAME
-  * sf tag concurrently (same spark-warehouse path) — the harness runs
+  * Lifecycle: every persisted table — base stores here, delta segments and
+  * compactions in [[DeltaStore]] — is written through ONE primitive,
+  * [[catalogOrBuild]]: if the session catalog has the table it is returned
+  * as is; otherwise a leftover warehouse directory is dropped, the caller's
+  * write runs, and the new table is returned. [[ensureBucketed]] and
+  * [[ensureTable]] are its two write shapes. Maintenance cycles go through
+  * the second primitive, [[DeltaStore.cycles]]. In this harness (in-memory
+  * catalog) a store is built once per JVM; on a real deployment the build
+  * is the ingest job and the catalog is Hive/Unity, so queries only ever
+  * see the read path. Builders are deterministic pure functions of the
+  * sf-dir inputs, so a rebuild can never change values. Table names embed
+  * the sf dir, keeping sf0.001/sf0.01/sf0.1 (and /tmp stress tiers)
+  * separate. Not safe against two JVMs building the SAME sf tag
+  * concurrently (same spark-warehouse path) — the harness runs
   * test/verify/bench sequentially.
   */
 object Stores {
 
-  /** Table-name tag for one corpus snapshot (sf dir). */
-  private[sources] def tag(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9]", "_")
+  /** Catalog table of store `name` for one corpus snapshot (sf dir). */
+  private[sources] def tableName(name: String, sfDir: String): String =
+    s"graft_store_${name}_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
 
-  /** A table absent from this session's (in-memory) catalog may still have
-    * a leftover warehouse directory from a previous JVM — CTAS then fails
-    * with locationAlreadyExists. The store is DERIVED state (a deterministic
-    * pure function of the sf-dir inputs), so a location the catalog doesn't
-    * own is safe to drop and rebuild; a real deployment's persistent
-    * catalog never hits this branch. */
-  private[sources] def dropStaleLocation(spark: SparkSession, table: String): Unit = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
+  /** Warehouse directory of a managed table, with its file system. */
+  private[sources] def location(spark: SparkSession, table: String): (FileSystem, Path) = {
+    val path = new Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
   }
 
-  /** Catalog-or-build: return the bucketed store table, building it from
-    * `build` on first use in this session. Synchronized — the registry is
-    * consulted from sequential query runners, but cheap safety is free. */
+  /** CATALOG-OR-BUILD: return store `name`'s table, running `write(table)`
+    * first if the session catalog lacks it. A table absent from this
+    * session's (in-memory) catalog may still have a warehouse directory
+    * left by a previous JVM — CTAS then fails with locationAlreadyExists.
+    * The store is DERIVED state, so a location the catalog doesn't own is
+    * safe to drop and rebuild; a real deployment's persistent catalog never
+    * hits that branch. Synchronized: builders nest (a store derived from
+    * another store builds it inside its own write). */
+  private[sources] def catalogOrBuild(spark: SparkSession, name: String, sfDir: String)
+                                     (write: String => Unit): DataFrame = synchronized {
+    val table = tableName(name, sfDir)
+    if (!spark.catalog.tableExists(table)) {
+      val (fs, path) = location(spark, table)
+      if (fs.exists(path)) fs.delete(path, true)
+      write(table)
+    }
+    spark.table(table)
+  }
+
+  /** A store bucketed (and sorted) by `keys` — the consuming join's key. */
   private[sources] def ensureBucketed(spark: SparkSession, name: String, sfDir: String,
-                             keys: Seq[String], buckets: Int)
-                            (build: => DataFrame): DataFrame = synchronized {
-    val table = s"graft_store_${name}_${tag(sfDir)}"
-    if (!spark.catalog.tableExists(table)) {
-      dropStaleLocation(spark, table)
-      Writers.writeBucketedCols(build, table, keys, buckets)
-    }
-    spark.table(table)
-  }
+                                      keys: Seq[String], buckets: Int)
+                                     (build: => DataFrame): DataFrame =
+    catalogOrBuild(spark, name, sfDir)(Writers.writeBucketedCols(build, _, keys, buckets))
 
-  /** Non-bucketed variant for tiny artifacts (per-term df, corpus scalars). */
+  /** A plain store, for tiny artifacts (per-term df, corpus scalars, model
+    * tables) and delta segments. */
   private[sources] def ensureTable(spark: SparkSession, name: String, sfDir: String)
-                         (build: => DataFrame): DataFrame = synchronized {
-    val table = s"graft_store_${name}_${tag(sfDir)}"
-    if (!spark.catalog.tableExists(table)) {
-      dropStaleLocation(spark, table)
-      build.write.mode("overwrite").saveAsTable(table)
-    }
-    spark.table(table)
-  }
+                                  (build: => DataFrame): DataFrame =
+    catalogOrBuild(spark, name, sfDir)(build.write.mode("overwrite").saveAsTable(_))
+
+  /** `c % mod == r` — every batch below (arrivals, departures, cycle
+    * slices) is a residue class of an id column. */
+  private def residue(c: String, mod: Long, r: Long): Column = pmod(col(c), lit(mod)) === r
 
   // ---- graph: typed edge store -------------------------------------------
 
@@ -98,19 +108,19 @@ object Stores {
   /** Read-path k-hop: BFS over the persisted src-bucketed edge store —
     * identical semantics (and oracle) to graph_khop, but the per-call edge
     * derive/shuffle is gone; each hop exchanges only the frontier. */
-  def khopStore(s: SparkSession, d: String, k: Int = 2): DataFrame = {
+  def khopStore(s: SparkSession, d: String): DataFrame = {
     val seeds = Tables.customer(s, d).filter(col("c_acctbal") > 9000)
       .select(col("c_custkey").cast("long").as("node"), lit(0L).as("hops"))
-    GraphOps.khopFrom(edgesBySrc(s, d), seeds, k)
+    GraphOps.khopFrom(edgesBySrc(s, d), seeds)
   }
 
   // ---- graph: components-delete store -------------------------------------
 
-  private val isDelOrder = pmod(col("l_orderkey"), lit(1000L)) === 0L
+  private val isDelOrder = residue("l_orderkey", 1000L, 0L)
 
   /** Standing (node → component) labeling over the full co-purchase graph —
-    * the table graph_components_del's registered form rebuilt inline every
-    * call (the r11/r12 weak grade: a full connectedComponents per query). */
+    * the table graph_components_del's registered form rebuilds inline
+    * every call. */
   def cpLabels(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "cp_labels", d, Seq("node"), 32) {
       GraphOps.connectedComponents(Tables.lineitem(s, d))
@@ -182,84 +192,59 @@ object Stores {
   def componentsUpsertStore(s: SparkSession, d: String): DataFrame =
     GraphOps.componentsUpsertFrom(cpLabelsBase(s, d), cpEdgesDeleted(s, d))
 
-  // ---- graph: components WRITE-BACK cycle ----------------------------------
-
-  /** Both components maintenance cycles as O(Δ) DELTA SEGMENTS over the
-    * persisted base labeling (cpLabelsBase is the base segment): each
-    * cycle persists only the CHANGED label rows (brand-new nodes +
-    * standing nodes whose label rewrites under the merge mapping —
-    * GraphOps.componentsUpsertDelta); no tombstones (the upsert direction
-    * only grows/merges). The r14 shape wrote the full maintained labeling
-    * back per cycle — O(graph) write I/O the delta segments remove. Cycle
-    * 2's delta computes against the cycle-1 MERGE-ON-READ view, so the
-    * segments compose exactly like successive in-memory passes. */
-  private def ensureComponentsDeltas(s: SparkSession, d: String): Unit = {
-    def arrivalEdges(r: Long) = GraphOps.copurchase(
-      Tables.lineitem(s, d).filter(pmod(col("l_orderkey"), lit(2000L)) === r))
-    def noTombstones = cpLabelsBase(s, d).select(col("node")).filter(lit(false))
-    DeltaStore.writeCycle(s, "ccd", d, 1,
-      GraphOps.componentsUpsertDelta(cpLabelsBase(s, d), arrivalEdges(0L)),
-      noTombstones)
-    DeltaStore.writeCycle(s, "ccd", d, 2,
-      GraphOps.componentsUpsertDelta(
-        DeltaStore.merged(s, "ccd", d, cpLabelsBase(s, d), Seq("node"), cycles = 1),
-        arrivalEdges(1000L)),
-      noTombstones)
-  }
-
   /** The composed TWO-CYCLE maintained components labeling over the DELTA
-    * store — each cycle persists only its changed rows; the labeling
-    * serves from the merge-on-read view. Final corpus = the full
-    * co-purchase graph, so the oracle is componentsSql() VERBATIM — the
-    * hash gate proves the O(Δ) label-graph merge composes losslessly
-    * across the segment boundaries. */
-  def componentsCycle2Store(s: SparkSession, d: String): DataFrame = {
-    ensureComponentsDeltas(s, d)
-    DeltaStore.merged(s, "ccd", d, cpLabelsBase(s, d), Seq("node"), cycles = 2)
-  }
+    * store (cpLabelsBase is the base segment). Cycle c's arrivals are the
+    * orders l_orderkey % 2000 == 1000(c−1); its segment carries only the
+    * CHANGED label rows (brand-new nodes + standing nodes whose label
+    * rewrites under the merge mapping — GraphOps.componentsUpsertDelta),
+    * computed against the previous merge-on-read view so the segments
+    * compose like successive in-memory passes. The upsert direction only
+    * grows/merges, so no tombstones. Final corpus = the full co-purchase
+    * graph, so the oracle is componentsSql() VERBATIM. */
+  def componentsCycle2Store(s: SparkSession, d: String): DataFrame =
+    DeltaStore.cycles(s, "ccd", d, cpLabelsBase(s, d), Seq("node"), 2) { (c, prev) =>
+      val arrivals = Tables.lineitem(s, d).filter(residue("l_orderkey", 2000L, 1000L * (c - 1)))
+      (GraphOps.componentsUpsertDelta(prev(), GraphOps.copurchase(arrivals)), None)
+    }
 
   // ---- dedup: minhash-LSH index store --------------------------------------
 
-  private val isDelDoc = pmod(col("doc_id"), lit(10L)) === 0L
+  private val isDelDoc = residue("doc_id", 10L, 0L)
 
   /** Standing portable-minhash signature table (doc_id, perm, minh). */
-  def mhSignatures(s: SparkSession, d: String, nPerms: Int = 16): DataFrame =
+  def mhSignatures(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "mh_sig", d, Seq("doc_id"), 32) {
-      MinhashPortable.minhashPortable(Tables.documents(s, d), nPerms)
+      MinhashPortable.minhashPortable(Tables.documents(s, d))
     }
 
-  /** Standing LSH band-key table, bucketed by doc_id like the signatures
-    * (the keyed-delete co-location). NOT bucketed by (band, bkey): that
-    * layout makes the candidate self-join exchange-free but pins one task
-    * per bucket, and band-key buckets are HOT-SKEWED (near-dup cliques
-    * share a bucket) — measured at sf0.1 r13, the skew-bound bucketed join
-    * ran ~1.5× slower than letting AQE split the shuffled join. Derived
-    * FROM the signature store (one read), not re-sketched. */
-  def mhBandKeys(s: SparkSession, d: String, nPerms: Int = 16,
-                 bands: Int = 4): DataFrame =
+  /** Standing LSH band-key table (16 perms in 4 bands of 4 rows), bucketed
+    * by doc_id like the signatures (the keyed-delete co-location). NOT
+    * bucketed by (band, bkey): that layout makes the candidate self-join
+    * exchange-free but pins one task per bucket, and band-key buckets are
+    * HOT-SKEWED (near-dup cliques share a bucket) — measured at sf0.1, the
+    * skew-bound bucketed join ran ~1.5× slower than letting AQE split the
+    * shuffled join. Derived FROM the signature store (one read), not
+    * re-sketched. */
+  def mhBandKeys(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "mh_keys", d, Seq("doc_id"), 32) {
-      MinhashPortable.bandKeys(mhSignatures(s, d, nPerms), nPerms / bands)
+      MinhashPortable.bandKeys(mhSignatures(s, d), 4)
     }
 
   /** Read-path LSH delete: keyed anti-join over the persisted signature +
     * band-key stores, surviving pairs emitted from the maintained index —
     * nothing re-sketched; same oracle as minhash_lsh_delete. */
-  def minhashLshDeleteStore(s: SparkSession, d: String, nPerms: Int = 16,
-                            bands: Int = 4): DataFrame = {
+  def minhashLshDeleteStore(s: SparkSession, d: String): DataFrame = {
     val delIds = Tables.documents(s, d).filter(isDelDoc).select(col("doc_id"))
-    MinhashPortable.minhashLshDeleteFrom(mhSignatures(s, d, nPerms),
-      mhBandKeys(s, d, nPerms, bands), delIds, nPerms)
+    MinhashPortable.minhashLshDeleteFrom(mhSignatures(s, d), mhBandKeys(s, d), delIds)
   }
 
   /** Read-path LSH upsert: sketch ONLY the arrival batch and join it
     * against the persisted base-slice index (ri_sig/ri_keys — the same
     * standing artifacts the resolve loop maintains); nothing standing is
     * re-sketched. Same oracle as minhash_lsh_upsert. */
-  def minhashLshUpsertStore(s: SparkSession, d: String, nPerms: Int = 16,
-                            bands: Int = 4): DataFrame =
-    MinhashPortable.minhashLshUpsertFrom(riSignatures(s, d, nPerms),
-        riBandKeys(s, d, nPerms, bands),
-        Tables.documents(s, d).filter(isDelDoc), nPerms, bands)
+  def minhashLshUpsertStore(s: SparkSession, d: String): DataFrame =
+    MinhashPortable.minhashLshUpsertFrom(riSignatures(s, d), riBandKeys(s, d),
+        Tables.documents(s, d).filter(isDelDoc))
       .withColumn("kind",
         when(pmod(col("doc_a"), lit(10L)) === 0L && pmod(col("doc_b"), lit(10L)) === 0L,
           lit("delta_delta")).otherwise(lit("delta_base")))
@@ -270,40 +255,35 @@ object Stores {
     * appends + 'P' created pairs) — O(Δ) emission where the plain store
     * rung's surviving-pair restatement was the measured 100× output
     * ceiling. Same oracle as minhash_lsh_upsert_delta. */
-  def minhashLshUpsertDeltaStore(s: SparkSession, d: String, nPerms: Int = 16,
-                                 bands: Int = 4): DataFrame =
-    MinhashPortable.minhashLshUpsertDeltaFrom(riSignatures(s, d, nPerms),
-      riBandKeys(s, d, nPerms, bands),
-      Tables.documents(s, d).filter(isDelDoc), nPerms, bands)
+  def minhashLshUpsertDeltaStore(s: SparkSession, d: String): DataFrame =
+    MinhashPortable.minhashLshUpsertDeltaFrom(riSignatures(s, d), riBandKeys(s, d),
+      Tables.documents(s, d).filter(isDelDoc))
 
   // ---- dedup: maintained-resolve standing state (base = pre-arrival) ------
 
-  private val isDepartureDoc = pmod(col("doc_id"), lit(10L)) === 5L
+  private val isDepartureDoc = residue("doc_id", 10L, 5L)
 
   /** Standing resolve-loop signatures over the BASE corpus (pre-arrival
     * slice, doc_id%10 != 0) — bucketed by doc_id (keyed-delete
     * co-location, same rationale as mh_sig). */
-  def riSignatures(s: SparkSession, d: String, nPerms: Int = 16): DataFrame =
+  def riSignatures(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "ri_sig", d, Seq("doc_id"), 32) {
-      MinhashPortable.minhashPortable(
-        Tables.documents(s, d).filter(!isDelDoc), nPerms)
+      MinhashPortable.minhashPortable(Tables.documents(s, d).filter(!isDelDoc))
     }
 
   /** Standing band keys, derived FROM the signature store (one bucketed
     * read — never re-sketched). */
-  def riBandKeys(s: SparkSession, d: String, nPerms: Int = 16,
-                 bands: Int = 4): DataFrame =
+  def riBandKeys(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "ri_keys", d, Seq("doc_id"), 32) {
-      MinhashPortable.bandKeys(riSignatures(s, d, nPerms), nPerms / bands)
+      MinhashPortable.bandKeys(riSignatures(s, d), 4)
     }
 
   /** The standing pair table of the base corpus, bucketed by doc_a (the
     * retire/survive splits key on the pair endpoints). Derived from the
     * two index stores. */
-  def riPairs(s: SparkSession, d: String, nPerms: Int = 16): DataFrame =
+  def riPairs(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "ri_pairs", d, Seq("doc_a"), 32) {
-      MinhashPortable.pairsFromIndex(riSignatures(s, d, nPerms),
-        riBandKeys(s, d, nPerms), nPerms)
+      MinhashPortable.pairsFromIndex(riSignatures(s, d), riBandKeys(s, d))
     }
 
   /** The standing cluster labeling of the base corpus, bucketed by node —
@@ -331,8 +311,6 @@ object Stores {
 
   // ---- dedup: resolve WRITE-BACK cycle (the day-2 loop) --------------------
 
-  private def cyc(c: Column, r: Long) = pmod(c, lit(20L)) === r
-
   /** The four merge-on-read views of the resolve delta store after
     * `cycles` maintenance cycles — base segments are the standing ri_*
     * stores; each cycle's segment carries only the O(Δ) artifact deltas
@@ -344,48 +322,40 @@ object Stores {
     DeltaStore.merged(s, "rpairs", d, riPairs(s, d), Seq("doc_a", "doc_b"), cycles),
     DeltaStore.merged(s, "rlab", d, riLabels(s, d), Seq("node"), cycles))
 
-  /** Both resolve maintenance cycles as O(Δ) DELTA SEGMENTS over the four
-    * persisted ri_* base artifacts (the r14 shape re-wrote all four
-    * maintained tables in full per cycle): sketch rows and band keys of
-    * the arrival batch, surviving created pairs + retired pair keys, and
-    * the changed labeling rows. Cycle 2's deltas compute against the
-    * cycle-1 merge-on-read views, composing like successive in-memory
-    * passes. */
-  private def ensureResolveDeltas(s: SparkSession, d: String): Unit = {
-    val docs = Tables.documents(s, d)
-    def seg(cycle: Int, arrR: Long, depR: Long): Unit = {
-      val have = Seq("rsig", "rkeys", "rpairs", "rlab")
-        .forall(n => DeltaStore.hasCycle(s, n, d, cycle))
-      if (!have) {
-        val (sigB, keysB, pairsB, labelsB) = resolveMerged(s, d, cycle - 1)
-        val dep = docs.filter(cyc(col("doc_id"), depR)).select(col("doc_id"))
-        val (sigU, keysU, pairsU, pairsT, labelsU, labelsT) =
-          ResolveInc.maintainDeltas(sigB, keysB, pairsB, labelsB,
-            docs.filter(cyc(col("doc_id"), arrR)), dep)
-        DeltaStore.writeCycle(s, "rsig", d, cycle, sigU, dep)
-        DeltaStore.writeCycle(s, "rkeys", d, cycle, keysU, dep)
-        DeltaStore.writeCycle(s, "rpairs", d, cycle, pairsU, pairsT)
-        DeltaStore.writeCycle(s, "rlab", d, cycle, labelsU, labelsT)
-      }
-    }
-    seg(1, 0L, 5L)
-    seg(2, 10L, 15L)
-  }
-
-  /** The composed TWO-CYCLE maintained resolve over the DELTA store —
-    * each cycle persists only its O(Δ) artifact deltas; the keep/drop
-    * verdicts serve from the merged labeling view. Oracle UNCHANGED: one
-    * from-scratch fixed-point re-resolve of the corpus after both batches
-    * (resolveCycle2Sql) — the hash gate proves the four-artifact segment
-    * fold composes losslessly across cycles. */
+  /** The composed TWO-CYCLE maintained resolve over the DELTA store. Cycle
+    * c's arrivals are doc_id % 20 == 10(c−1), its departures 10(c−1)+5;
+    * one cycle writes FOUR segments from one maintenance pass (sketch rows
+    * and band keys of the arrivals, surviving created pairs + retired pair
+    * keys, changed labeling rows), computed against the previous cycle's
+    * merge-on-read views — which is why this family keeps its own script
+    * instead of [[DeltaStore.cycles]]. The keep/drop verdicts serve from
+    * the merged labeling view. Oracle UNCHANGED: one from-scratch
+    * fixed-point re-resolve of the corpus after both batches
+    * (resolveCycle2Sql). */
   def resolveCycle2Store(s: SparkSession, d: String): DataFrame = {
-    ensureResolveDeltas(s, d)
+    val docs = Tables.documents(s, d)
+    val artifacts = Seq("rsig", "rkeys", "rpairs", "rlab")
+    for (c <- 1 to 2 if !artifacts.forall(DeltaStore.hasCycle(s, _, d, c))) {
+      val (sigB, keysB, pairsB, labelsB) = resolveMerged(s, d, c - 1)
+      val dep = docs.filter(residue("doc_id", 20L, 10L * (c - 1) + 5L)).select(col("doc_id"))
+      val (sigU, keysU, pairsU, pairsT, labelsU, labelsT) =
+        ResolveInc.maintainDeltas(sigB, keysB, pairsB, labelsB,
+          docs.filter(residue("doc_id", 20L, 10L * (c - 1))), dep)
+      DeltaStore.writeCycle(s, "rsig", d, c, sigU, dep)
+      DeltaStore.writeCycle(s, "rkeys", d, c, keysU, dep)
+      DeltaStore.writeCycle(s, "rpairs", d, c, pairsU, pairsT)
+      DeltaStore.writeCycle(s, "rlab", d, c, labelsU, labelsT)
+    }
     DeltaStore.merged(s, "rlab", d, riLabels(s, d), Seq("node"), cycles = 2)
       .select(col("node").as("doc_id"), col("label").as("canonical_id"),
         (col("node") === col("label")).as("keep"))
   }
 
   // ---- dedup: semdedup trained partition -----------------------------------
+
+  /** The vec_id %10 == 0 slice: the arrivals of the upsert rungs, the
+    * departures of the delete rungs; the rest is the standing base. */
+  private val isDeltaVec = residue("vec_id", 10L, 0L)
 
   /** The trained semdedup corpus partition (cluster, vec_id, embedding)
     * bucketed by cluster — k-means training + assignment paid once at
@@ -410,22 +380,20 @@ object Stores {
     * (vec_id%10 != 0) BEFORE any arrival exists (the production
     * timeline), persisted so the read path never re-trains. Bounded:
     * ≤ kMax rows of 64 floats. */
-  def semdedupCentsBase(s: SparkSession, d: String): DataFrame =
+  private def semdedupCentsBase(s: SparkSession, d: String): DataFrame =
     ensureTable(s, "sd_cents_base", d) {
       import s.implicits._
-      val base = Tables.embeddings(s, d)
-        .filter(pmod(col("vec_id"), lit(10L)) =!= 0L)
+      val base = Tables.embeddings(s, d).filter(!isDeltaVec)
       val cents = Cluster.trainCentroids(base, Cluster.scaledK(base), iters = 1)
       s.createDataset(cents.toSeq).toDF("cell", "embedding")
     }
 
   /** The standing BASE-slice partition (cluster, vec_id, embedding) under
     * the frozen base-trained quantizer, bucketed by cluster. */
-  def semdedupBaseClusters(s: SparkSession, d: String): DataFrame =
+  private def semdedupBaseClusters(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "sd_asg_base", d, Seq("cluster"), 32) {
-      val base = Tables.embeddings(s, d)
-        .filter(pmod(col("vec_id"), lit(10L)) =!= 0L)
-      Cluster.assignUnder(base, collectCents(semdedupCentsBase(s, d)))
+      Cluster.assignUnder(Tables.embeddings(s, d).filter(!isDeltaVec),
+        collectCents(semdedupCentsBase(s, d)))
     }
 
   private def collectCents(tbl: DataFrame): Array[(Long, Array[Float])] = {
@@ -440,8 +408,7 @@ object Stores {
     * k-means training, no standing row re-assigned. Same oracle as
     * semdedup_upsert. */
   def semdedupUpsertStore(s: SparkSession, d: String): DataFrame = {
-    val arrivals = Tables.embeddings(s, d)
-      .filter(pmod(col("vec_id"), lit(10L)) === 0L)
+    val arrivals = Tables.embeddings(s, d).filter(isDeltaVec)
     Cluster.semdedupUpsertFrom(semdedupBaseClusters(s, d),
       Cluster.assignUnder(arrivals, collectCents(semdedupCentsBase(s, d))))
   }
@@ -451,14 +418,13 @@ object Stores {
     * anchored on the departures so only touched cells are scanned. Same
     * oracle as semdedup_delete. */
   def semdedupDeleteStore(s: SparkSession, d: String): DataFrame =
-    Cluster.semdedupDeleteFrom(semdedupClusters(s, d),
-      pmod(col("vec_id"), lit(10L)) === 0L)
+    Cluster.semdedupDeleteFrom(semdedupClusters(s, d), isDeltaVec)
 
   /** The persisted HIERARCHICAL two-level semdedup partition (composite
     * cluster = cell·2³² + sub) bucketed by cluster — the scale-path
     * quantizer's standing artifact: the two-level train/assign (coarse
     * Lloyd + per-cell sub-Lloyd) is paid once at ingest. */
-  def semdedupHierClusters(s: SparkSession, d: String): DataFrame =
+  private def semdedupHierClusters(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "sd_hier_asg", d, Seq("cluster"), 32) {
       Cluster.hierAssigned(Tables.embeddings(s, d), targetCell = 64, fan = 64,
         kMin = 8, kMax = 4096, iters = 1)
@@ -471,54 +437,52 @@ object Stores {
   def semdedupHierStore(s: SparkSession, d: String): DataFrame =
     Cluster.semdedupPairsFrom(semdedupHierClusters(s, d))
 
-  /** The BASE-trained frozen TWO-LEVEL quantizer + base partition — the
-    * three persisted artifacts of the hierarchical upsert rung: coarse
-    * centroids (≤ kMax rows), sub-centroids keyed by cell (the
-    * distributed half of the model), and the standing base partition
-    * bucketed by cluster. Trained once on the base slice, before any
-    * arrival exists. */
-  private def ensureHierBase(s: SparkSession, d: String): Unit = synchronized {
-    val tCents = s"graft_store_sdh_cents_base_${tag(d)}"
-    val tSeeds = s"graft_store_sdh_seeds_base_${tag(d)}"
-    val tAsg = s"graft_store_sdh_asg_base_${tag(d)}"
-    if (!s.catalog.tableExists(tCents) || !s.catalog.tableExists(tSeeds) ||
-        !s.catalog.tableExists(tAsg)) {
-      import s.implicits._
-      val base = Tables.embeddings(s, d)
-        .filter(pmod(col("vec_id"), lit(10L)) =!= 0L)
-      val (cents, seeds, _) =
-        Cluster.hierModel(base, targetCell = 64, fan = 64, kMin = 8,
-          kMax = 4096, iters = 1)
-      dropStaleLocation(s, tCents)
-      s.createDataset(cents.toSeq).toDF("cell", "embedding")
-        .write.mode("overwrite").saveAsTable(tCents)
-      dropStaleLocation(s, tSeeds)
-      seeds.write.mode("overwrite").saveAsTable(tSeeds)
-      dropStaleLocation(s, tAsg)
-      Writers.writeBucketedCols(
-        Cluster.hierAssignUnder(base, cents, seeds), tAsg, Seq("cluster"), 32)
-    }
-  }
-
-  /** Read-path hierarchical semdedup upsert: arrivals assigned under the
-    * PERSISTED two-level model (coarse cents collected — the bounded
-    * model-parameter class; sub-centroids joined from the catalog) and
-    * the created pairs emitted against the persisted base partition. NO
-    * training anywhere in the call. Same oracle as semdedup_hier_upsert. */
+  /** Read-path hierarchical semdedup upsert over the three persisted
+    * artifacts of the BASE-trained frozen TWO-LEVEL quantizer: coarse
+    * centroids (≤ kMax rows, collected — the bounded model-parameter
+    * class), sub-centroids keyed by cell (the distributed half of the
+    * model, joined from the catalog) and the standing base partition
+    * bucketed by cluster. The model is trained once on the base slice,
+    * before any arrival exists, and only if a table is missing; arrivals
+    * are assigned under it and the created pairs emitted against the base
+    * partition. NO training anywhere in a warm call. Same oracle as
+    * semdedup_hier_upsert. */
   def semdedupHierUpsertStore(s: SparkSession, d: String): DataFrame = {
-    ensureHierBase(s, d)
-    val arrivals = Tables.embeddings(s, d)
-      .filter(pmod(col("vec_id"), lit(10L)) === 0L)
-    val cents = collectCents(s.table(s"graft_store_sdh_cents_base_${tag(d)}"))
-    Cluster.semdedupUpsertFrom(
-      s.table(s"graft_store_sdh_asg_base_${tag(d)}"),
-      Cluster.hierAssignUnder(arrivals, cents,
-        s.table(s"graft_store_sdh_seeds_base_${tag(d)}")))
+    lazy val base = Tables.embeddings(s, d).filter(!isDeltaVec)
+    lazy val (modelCents, modelSeeds, _) = Cluster.hierModel(base, targetCell = 64,
+      fan = 64, kMin = 8, kMax = 4096, iters = 1)
+    val cents = ensureTable(s, "sdh_cents_base", d) {
+      import s.implicits._
+      s.createDataset(modelCents.toSeq).toDF("cell", "embedding")
+    }
+    val seeds = ensureTable(s, "sdh_seeds_base", d)(modelSeeds)
+    val asg = ensureBucketed(s, "sdh_asg_base", d, Seq("cluster"), 32) {
+      Cluster.hierAssignUnder(base, modelCents, modelSeeds)
+    }
+    val arrivals = Tables.embeddings(s, d).filter(isDeltaVec)
+    Cluster.semdedupUpsertFrom(asg,
+      Cluster.hierAssignUnder(arrivals, collectCents(cents), seeds))
   }
 
-  /** The cycle family's frozen quantizer, persisted WITH the partition
-    * (sdc1_cents) so every cycle's read path assigns its arrivals from
-    * the catalog instead of re-training over the corpus. */
+  /** The composed TWO-CYCLE maintained semdedup over the DELTA store. The
+    * cycle family's frozen quantizer is persisted WITH the partition
+    * (sdc1_cents) so every cycle assigns its arrivals from the catalog
+    * instead of re-training; assignment under it is a pure per-vector
+    * function, so a cycle's segment is exactly (assigned arrivals,
+    * departure ids) over the base partition (vec_id % 20 ∉ {0, 10}). The
+    * within-cluster pair set serves from the merge-on-read view. Oracle
+    * UNCHANGED: one from-scratch replay over the survivors under the
+    * frozen quantizer (semdedupCycle2Sql). */
+  def semdedupCycle2Store(s: SparkSession, d: String): DataFrame = {
+    val base = ensureBucketed(s, "sdd_base", d, Seq("cluster"), 32) {
+      Cluster.assignUnder(Tables.embeddings(s, d).filter(preArrival(20L, 2)),
+        semdedupCycleCents(s, d))
+    }
+    lazy val cents = semdedupCycleCents(s, d)
+    Cluster.semdedupPairsFrom(vectorCycles(s, d, "sdd", base, Tables.embeddings(s, d),
+      20L, 2)(Cluster.assignUnder(_, cents)))
+  }
+
   private def semdedupCycleCents(s: SparkSession, d: String): Array[(Long, Array[Float])] =
     collectCents(ensureTable(s, "sdc1_cents", d) {
       import s.implicits._
@@ -528,44 +492,6 @@ object Stores {
         .toDF("cell", "embedding")
     })
 
-  /** The two-cycle BASE partition (vec_id %20 ∉ {0,10} under the frozen
-    * quantizer), cluster-bucketed — the ingest-time base SEGMENT of the
-    * semdedup delta store. */
-  private def semdedupDeltaBase(s: SparkSession, d: String): DataFrame =
-    ensureBucketed(s, "sdd_base", d, Seq("cluster"), 32) {
-      Cluster.assignUnder(
-        Tables.embeddings(s, d).filter(!vCyc(0L) && !vCyc(10L)),
-        semdedupCycleCents(s, d))
-    }
-
-  /** Both semdedup maintenance cycles as O(Δ) DELTA SEGMENTS (assignment
-    * under the frozen quantizer is a pure per-vector function: a cycle's
-    * segment is exactly the assigned arrivals + the departure ids — the
-    * r14 shape re-wrote the whole cluster-bucketed partition per cycle). */
-  private def ensureSemdedupDeltas(s: SparkSession, d: String): Unit = {
-    val emb = Tables.embeddings(s, d)
-    lazy val cents = semdedupCycleCents(s, d)
-    DeltaStore.writeCycle(s, "sdd", d, 1,
-      Cluster.assignUnder(emb.filter(vCyc(0L)), cents),
-      emb.filter(vCyc(5L)).select(col("vec_id")))
-    DeltaStore.writeCycle(s, "sdd", d, 2,
-      Cluster.assignUnder(emb.filter(vCyc(10L)), cents),
-      emb.filter(vCyc(15L)).select(col("vec_id")))
-  }
-
-  /** The composed TWO-CYCLE maintained semdedup over the DELTA store:
-    * each cycle persists an O(Δ) segment (arrivals assigned + appended,
-    * departures tombstoned); the within-cluster pair set serves from the
-    * merge-on-read view — per-cycle write I/O no longer scales with the
-    * partition size. Oracle UNCHANGED: one from-scratch replay over the
-    * survivors under the frozen quantizer (semdedupCycle2Sql). */
-  def semdedupCycle2Store(s: SparkSession, d: String): DataFrame = {
-    ensureSemdedupDeltas(s, d)
-    Cluster.semdedupPairsFrom(
-      DeltaStore.merged(s, "sdd", d, semdedupDeltaBase(s, d),
-        Seq("vec_id"), cycles = 2))
-  }
-
   // ---- similarity: k-NN graph store ----------------------------------------
 
   /** The persisted NN-descent k-NN graph (node, nbr, cos) bucketed by node
@@ -573,52 +499,47 @@ object Stores {
     * node every round. */
   def knnGraphStore(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "ann_graph", d, Seq("node"), 32) {
-      graft.operators.GraphAnn.knnGraph(Tables.embeddings(s, d))
+      GraphAnn.knnGraph(Tables.embeddings(s, d))
     }
 
   /** Read-path graph-ANN: beam search over the persisted graph — queries
     * pay only the walk; same oracle as ann_graph. */
   def annGraphStore(s: SparkSession, d: String): DataFrame =
-    graft.operators.GraphAnn.annGraphSearchFrom(knnGraphStore(s, d),
-      Tables.embeddings(s, d))
+    GraphAnn.annGraphSearchFrom(knnGraphStore(s, d), Tables.embeddings(s, d))
 
   /** The WIDENED-build k-NN graph (kBuild=32 descent truncated to the same
-    * kNbrs=16 searched width) — the build-quality rung the 10× tier
-    * motivated: NN-descent at the searched width leaves exact neighbors
-    * graph-unreachable (search recall 0.967, where more search rounds do
-    * NOT help); descending 2× wide and truncating closes it (1.000 at 10×,
-    * GraphAnnProbe) for ~2.6× build cost paid once at ingest. The searched
-    * graph is the same size, so query cost is unchanged. */
+    * kNbrs=16 searched width): NN-descent at the searched width leaves
+    * exact neighbors graph-unreachable (search recall 0.967 at the 10×
+    * tier, where more search rounds do NOT help); descending 2× wide and
+    * truncating closes it (1.000, GraphAnnProbe) for ~2.6× build cost paid
+    * once at ingest. The searched graph is the same size, so query cost is
+    * unchanged. */
   def knnGraphStoreWide(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "ann_graph_w", d, Seq("node"), 32) {
-      graft.operators.GraphAnn.knnGraph(Tables.embeddings(s, d), kBuild = 32)
+      GraphAnn.knnGraph(Tables.embeddings(s, d), kBuild = 32)
     }
 
   /** Read-path graph-ANN over the widened-build persisted graph. */
   def annGraphStoreWide(s: SparkSession, d: String): DataFrame =
-    graft.operators.GraphAnn.annGraphSearchFrom(knnGraphStoreWide(s, d),
-      Tables.embeddings(s, d))
+    GraphAnn.annGraphSearchFrom(knnGraphStoreWide(s, d), Tables.embeddings(s, d))
 
   /** The BASE-slice persisted k-NN graph (vec_id%10 != 0 corpus) — the
     * standing index the graph-ANN upsert direction maintains. */
   def knnGraphStoreBase(s: SparkSession, d: String): DataFrame =
     ensureBucketed(s, "ann_graph_base", d, Seq("node"), 32) {
-      graft.operators.GraphAnn.knnGraph(
-        Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(10L)) =!= 0L))
+      GraphAnn.knnGraph(Tables.embeddings(s, d).filter(!isDeltaVec))
     }
 
   /** Read-path graph-ANN upsert: arrival batch beam-searches the PERSISTED
     * base graph and one touched-scoped descent round repairs it — the
     * standing index is never rebuilt; same oracle as ann_graph_upsert. */
   def annGraphUpsertStore(s: SparkSession, d: String): DataFrame =
-    graft.operators.GraphAnn.annGraphUpsertFrom(knnGraphStoreBase(s, d),
-      Tables.embeddings(s, d))
+    GraphAnn.annGraphUpsertFrom(knnGraphStoreBase(s, d), Tables.embeddings(s, d))
 
   /** Read-path graph-ANN delete: keyed drop + touched adjacency re-fill
     * over the PERSISTED full graph; same oracle as ann_graph_delete. */
   def annGraphDeleteStore(s: SparkSession, d: String): DataFrame =
-    graft.operators.GraphAnn.annGraphDeleteFrom(knnGraphStore(s, d),
-      Tables.embeddings(s, d))
+    GraphAnn.annGraphDeleteFrom(knnGraphStore(s, d), Tables.embeddings(s, d))
 
   /** The graph staleness monitor served from the PERSISTED base graph —
     * the production shape: the monitor runs against the standing index,
@@ -626,58 +547,52 @@ object Stores {
     * (the persisted graph is the inline build bit-exactly — the
     * ann_graph_store identity). */
   def annGraphDriftStore(s: SparkSession, d: String): DataFrame =
-    graft.operators.GraphAnn.annGraphDriftFrom(knnGraphStoreBase(s, d),
-      Tables.embeddings(s, d))
+    GraphAnn.annGraphDriftFrom(knnGraphStoreBase(s, d), Tables.embeddings(s, d))
+
+  // ---- vector delta stores: the shared cycle shape ---------------------------
+
+  /** No arrival class of an `n`-cycle store: vec_id % mod ∉ {0, 10, …}. */
+  private def preArrival(mod: Long, n: Int): Column =
+    (0 until n).map(i => !residue("vec_id", mod, 10L * i)).reduce(_ && _)
+
+  /** The cycle shape of the frozen-model vector stores on
+    * [[DeltaStore.cycles]]: cycle c upserts the arrival class
+    * vec_id % mod == 10(c−1) of `emb` through `encode` — a pure per-vector
+    * function of a frozen model, so nothing standing is re-encoded or
+    * re-written — and tombstones the departure class 10(c−1)+5. */
+  private def vectorCycles(s: SparkSession, d: String, name: String, base: DataFrame,
+                           emb: DataFrame, mod: Long, n: Int)
+                          (encode: DataFrame => DataFrame): DataFrame =
+    DeltaStore.cycles(s, name, d, base, Seq("vec_id"), n) { (c, _) =>
+      val r = 10L * (c - 1)
+      (encode(emb.filter(residue("vec_id", mod, r))),
+        Some(emb.filter(residue("vec_id", mod, r + 5L)).select(col("vec_id"))))
+    }
 
   // ---- ann: k-NN graph WRITE-BACK cycle ------------------------------------
 
-  private def vCyc(r: Long) = pmod(col("vec_id"), lit(20L)) === r
-
-  /** The standing k-NN graph over the two-cycle BASE slice
-    * (vec_id %20 ∉ {0,10}) — the index the write-back loop maintains. */
-  private def knnGraphStoreB20(s: SparkSession, d: String): DataFrame =
-    ensureBucketed(s, "ann_graph_b20", d, Seq("node"), 32) {
-      graft.operators.GraphAnn.knnGraph(
-        Tables.embeddings(s, d).filter(!vCyc(0L) && !vCyc(10L)))
-    }
-
-  /** Both graph-ANN maintenance cycles as O(Δ) DELTA SEGMENTS over the
-    * persisted base graph (knnGraphStoreB20 is the base segment): each
-    * cycle persists ONLY the touched-node adjacency
-    * (GraphAnn.upsertedGraphDelta — arrivals + base nodes that adopted a
-    * reverse edge or entered the local descent round, O(|touched|·K)
-    * rows); no tombstones (the upsert direction only grows). The r14
-    * shape wrote the full maintained graph back per cycle — the 100×
-    * tier's 1,266 s cold write-back, which these segments reduce to the
-    * delta. Cycle 2's delta computes against the cycle-1 merge-on-read
-    * view, composing exactly like successive in-memory passes. */
-  private def ensureAnnGraphDeltas(s: SparkSession, d: String): Unit = {
-    val emb = Tables.embeddings(s, d)
-    def noTombstones = emb.select(col("vec_id").as("node")).filter(lit(false))
-    DeltaStore.writeCycle(s, "agd", d, 1,
-      graft.operators.GraphAnn.upsertedGraphDelta(knnGraphStoreB20(s, d),
-        emb.filter(!vCyc(10L)), arrPred = vCyc(0L)),
-      noTombstones)
-    DeltaStore.writeCycle(s, "agd", d, 2,
-      graft.operators.GraphAnn.upsertedGraphDelta(
-        DeltaStore.merged(s, "agd", d, knnGraphStoreB20(s, d), Seq("node"),
-          cycles = 1),
-        emb, arrPred = vCyc(10L)),
-      noTombstones)
-  }
-
   /** The composed TWO-CYCLE maintained graph-ANN search over the DELTA
-    * store — each cycle persists only its touched-node adjacency; beam
-    * search runs over the merge-on-read view (untouched base adjacency
-    * verbatim, latest touched rows win). Oracle = annGraphCycle2Sql's
-    * full replay, UNCHANGED — the hash gate proves the segment fold
-    * equals two in-memory maintenance passes bit-exactly. */
+    * store. The base segment is the k-NN graph over vec_id % 20 ∉ {0, 10};
+    * cycle c's arrivals are vec_id % 20 == 10(c−1), and its segment
+    * carries ONLY the touched-node adjacency (GraphAnn.upsertedGraphDelta
+    * — arrivals + base nodes that adopted a reverse edge or entered the
+    * local descent round, O(|touched|·K) rows), computed against the
+    * previous merge-on-read view. The upsert direction only grows, so no
+    * tombstones. Beam search runs over the merged view (untouched base
+    * adjacency verbatim, latest touched rows win). Oracle =
+    * annGraphCycle2Sql's full replay, UNCHANGED. */
   def annGraphCycle2Store(s: SparkSession, d: String): DataFrame = {
-    ensureAnnGraphDeltas(s, d)
-    graft.operators.GraphAnn.annGraphSearchFrom(
-      DeltaStore.merged(s, "agd", d, knnGraphStoreB20(s, d), Seq("node"),
-        cycles = 2),
-      Tables.embeddings(s, d))
+    val base = ensureBucketed(s, "ann_graph_b20", d, Seq("node"), 32) {
+      GraphAnn.knnGraph(Tables.embeddings(s, d).filter(preArrival(20L, 2)))
+    }
+    val emb = Tables.embeddings(s, d)
+    val merged = DeltaStore.cycles(s, "agd", d, base, Seq("node"), 2) { (c, prev) =>
+      // cycle 1's corpus excludes cycle 2's arrivals — they have not arrived
+      val corpus = if (c == 1) emb.filter(!residue("vec_id", 20L, 10L)) else emb
+      (GraphAnn.upsertedGraphDelta(prev(), corpus, arrPred = residue("vec_id", 20L, 10L * (c - 1))),
+        None)
+    }
+    GraphAnn.annGraphSearchFrom(merged, Tables.embeddings(s, d))
   }
 
   // ---- search: BM25 index store --------------------------------------------
@@ -761,47 +676,35 @@ object Stores {
 
   // ---- search: BM25 WRITE-BACK cycle ---------------------------------------
 
-  /** Both BM25 maintenance cycles as O(Δ) DELTA SEGMENTS over the four
-    * persisted base-slice artifacts (the r14 shape re-wrote all four
-    * maintained tables in full per cycle): postings/doclens segments
-    * carry the arrival batch's rows + departure tombstones (pure per-doc
-    * functions — O(Δ text) tokenize, O(Δ) write); df and the corpus
-    * scalars are ADDITIVE counters, so their segments carry signed value
-    * rows (+1 per arriving doc containing the term, −1 per departing one)
-    * merged by summation at read. */
-  private def ensureBm25Deltas(s: SparkSession, d: String): Unit = {
+  /** The composed TWO-CYCLE maintained BM25 search over the DELTA store,
+    * over the four base-slice artifacts. Cycle c's arrivals are
+    * doc_id % 20 == 10(c−1), its departures 10(c−1)+5. Postings/doclens
+    * segments carry the arrivals' rows + departure tombstones (pure
+    * per-doc functions — O(Δ text) tokenize, O(Δ) write) and merge
+    * latest-wins; df and the corpus scalars are ADDITIVE counters, so
+    * their segments carry signed value rows (+1 per arriving doc
+    * containing the term, −1 per departing one) merged by summation — the
+    * reason this family keeps its own script instead of
+    * [[DeltaStore.cycles]]. Oracle UNCHANGED: one from-scratch index of the
+    * corpus after both batches (bm25Cycle2Sql). */
+  def bm25Cycle2Store(s: SparkSession, d: String, terms: Seq[String]): DataFrame = {
     val docs = Tables.documents(s, d)
-    def seg(cycle: Int, arrR: Long, depR: Long): Unit = {
+    for (c <- 1 to 2) {
       lazy val (arrPost, arrDl) =
-        Search.bm25IndexParts(docs.filter(cyc(col("doc_id"), arrR)))
-      lazy val depDocs = docs.filter(cyc(col("doc_id"), depR))
+        Search.bm25IndexParts(docs.filter(residue("doc_id", 20L, 10L * (c - 1))))
+      lazy val depDocs = docs.filter(residue("doc_id", 20L, 10L * (c - 1) + 5L))
       lazy val (depPost, depDl) = Search.bm25IndexParts(depDocs)
-      DeltaStore.writeCycle(s, "bmp", d, cycle,
-        arrPost, depDocs.select(col("doc_id")))
-      DeltaStore.writeCycle(s, "bmdl", d, cycle,
-        arrDl, depDocs.select(col("doc_id")))
-      DeltaStore.writeAdditive(s, "bmdf", d, cycle,
+      DeltaStore.writeCycle(s, "bmp", d, c, arrPost, depDocs.select(col("doc_id")))
+      DeltaStore.writeCycle(s, "bmdl", d, c, arrDl, depDocs.select(col("doc_id")))
+      DeltaStore.writeAdditive(s, "bmdf", d, c,
         arrPost.groupBy(col("term")).agg(count(lit(1)).as("df"))
           .unionByName(depPost.groupBy(col("term"))
             .agg((count(lit(1)) * -1).as("df"))))
-      DeltaStore.writeAdditive(s, "bmsc", d, cycle,
+      DeltaStore.writeAdditive(s, "bmsc", d, c,
         arrDl.agg(count(lit(1)).as("n_docs"), sum(col("len")).as("sum_len"))
           .unionByName(depDl.agg((count(lit(1)) * -1).as("n_docs"),
             (sum(col("len")) * -1).as("sum_len"))))
     }
-    seg(1, 0L, 5L)
-    seg(2, 10L, 15L)
-  }
-
-  /** The composed TWO-CYCLE maintained BM25 search over the DELTA store —
-    * each cycle persists O(Δ) segments; the query terms score from the
-    * four merge-on-read views (postings/doclens latest-wins, df/scalars
-    * summed). Oracle UNCHANGED: one from-scratch index of the corpus
-    * after both batches (bm25Cycle2Sql) — the hash gate proves the
-    * signed-counter fold carries exact counts across segment
-    * boundaries. */
-  def bm25Cycle2Store(s: SparkSession, d: String, terms: Seq[String]): DataFrame = {
-    ensureBm25Deltas(s, d)
     Search.bm25SearchFrom(
       DeltaStore.merged(s, "bmp", d, bm25PostingsBase(s, d), Seq("doc_id"), 2),
       DeltaStore.merged(s, "bmdl", d, bm25DoclensBase(s, d), Seq("doc_id"), 2),
@@ -812,89 +715,78 @@ object Stores {
       terms)
   }
 
-  // ---- streaming: CDC upsert state snapshot --------------------------------
+  // ---- streaming: state snapshots ------------------------------------------
 
   /** Standing per-key CDC upsert state (key, last_seq, version, live)
     * after an ops prefix — the checkpoint-boundary snapshot a streaming
     * deployment bootstraps from (flatMapGroupsWithState initialState),
     * bucketed by key. The build replays the prefix through the SAME
-    * transition the stream runs (Streams.upsertStateSnapshot). */
-  def upsertStateStore(s: SparkSession, d: String,
-                       prefix: Seq[graft.streaming.Streams.Upsert]): DataFrame =
-    // the prefix boundary is part of the snapshot identity: a different
-    // ops prefix (another batch split) must build its own store, so the
-    // cache key carries the prefix length (r13 advice — the fixed
-    // qs(0)++qs(1) caller was the only one, but the name now says so)
+    * transition the stream runs (Streams.upsertStateSnapshot). The prefix
+    * boundary is part of the snapshot identity: another batch split must
+    * build its own store, so the name carries the prefix length. */
+  def upsertStateStore(s: SparkSession, d: String, prefix: Seq[Streams.Upsert]): DataFrame =
     ensureBucketed(s, s"upsert_state_${prefix.length}", d, Seq("key"), 32) {
       import s.implicits._
-      graft.streaming.Streams.upsertStateSnapshot(s.createDataset(prefix))
+      Streams.upsertStateSnapshot(s.createDataset(prefix))
         .toDF("key", "last_seq", "version", "live")
     }
 
   /** The streaming member of the WRITE-BACK cycle matrix: the persisted
-    * two-batch snapshot advanced through the NEXT batch's ops FROM the
-    * store (Streams.upsertStateSnapshotFrom — history never re-replayed),
-    * the advance persisted as an O(touched-keys) DELTA SEGMENT (only the
-    * batch's keys move; the r14 shape re-wrote the full key-bucketed
-    * snapshot), and the next checkpoint-boundary snapshot served as the
-    * merge-on-read view. Cache key carries both boundary lengths, same
-    * rationale as upsertStateStore. */
-  def upsertStateStoreCycle2(s: SparkSession, d: String,
-                             prefix: Seq[graft.streaming.Streams.Upsert],
-                             batch: Seq[graft.streaming.Streams.Upsert]): DataFrame = {
+    * snapshot advanced through the NEXT batch's ops FROM the store
+    * (Streams.upsertStateSnapshotFrom — history never re-replayed), the
+    * advance persisted as a one-cycle DELTA SEGMENT (only the batch's keys
+    * move, so the segment is O(touched keys)), and the next
+    * checkpoint-boundary snapshot served as the merge-on-read view. The
+    * name carries both boundary lengths, as for upsertStateStore. */
+  def upsertStateStoreCycle2(s: SparkSession, d: String, prefix: Seq[Streams.Upsert],
+                             batch: Seq[Streams.Upsert]): DataFrame = {
     import s.implicits._
     val base = upsertStateStore(s, d, prefix)
-    val name = s"upsd_${prefix.length}_${batch.length}"
     val touched = batch.map(_.key).distinct
-    DeltaStore.writeCycle(s, name, d, 1, {
-      // advance ONLY the touched keys' state through the batch — per-key
-      // transitions are independent, so this IS the full advance
-      // restricted to the touched keys
+    DeltaStore.cycles(s, s"upsd_${prefix.length}_${batch.length}", d, base,
+        Seq("key"), 1) { (_, _) =>
+      // per-key transitions are independent, so advancing ONLY the touched
+      // keys IS the full advance restricted to them
       val init = base.filter(col("key").isin(touched: _*))
         .select(col("key").as("_1"), col("last_seq").as("_2"),
           col("version").as("_3"), col("live").as("_4"))
         .as[(Long, Long, Long, Boolean)]
-      graft.streaming.Streams.upsertStateSnapshotFrom(init, s.createDataset(batch))
-        .toDF("key", "last_seq", "version", "live")
-    }, base.select(col("key")).filter(lit(false)))
-    DeltaStore.merged(s, name, d, base, Seq("key"), cycles = 1)
+      (Streams.upsertStateSnapshotFrom(init, s.createDataset(batch))
+        .toDF("key", "last_seq", "version", "live"), None)
+    }
   }
 
   /** Standing per-user OPEN-session state (user_id, session_id, start_us,
     * last_us, n) after an event prefix — the sessionization snapshot a
     * streaming deployment bootstraps from, bucketed by user_id. Built by
     * replaying the prefix through the SAME sessionStep transition the
-    * stream runs. */
-  def sessionStateStore(s: SparkSession, d: String,
-                        prefix: Seq[graft.streaming.Streams.Event]): DataFrame =
-    // prefix length in the key, same rationale as upsertStateStore
+    * stream runs; prefix length in the name, as for upsertStateStore. */
+  def sessionStateStore(s: SparkSession, d: String, prefix: Seq[Streams.Event]): DataFrame =
     ensureBucketed(s, s"session_state_${prefix.length}", d, Seq("user_id"), 32) {
       import s.implicits._
-      graft.streaming.Streams.sessionStateSnapshot(s.createDataset(prefix))
+      Streams.sessionStateSnapshot(s.createDataset(prefix))
         .toDF("user_id", "session_id", "start_us", "last_us", "n")
     }
 
   /** The session analog of [[upsertStateStoreCycle2]]: the persisted
-    * two-batch OPEN-session snapshot advanced through the next batch's
-    * events FROM the store (Streams.sessionStateSnapshotFrom), persisted
-    * as an O(touched-users) DELTA SEGMENT, and served as the
-    * merge-on-read view. */
-  def sessionStateStoreCycle2(s: SparkSession, d: String,
-                              prefix: Seq[graft.streaming.Streams.Event],
-                              batch: Seq[graft.streaming.Streams.Event]): DataFrame = {
+    * OPEN-session snapshot advanced through the next batch's events FROM
+    * the store (Streams.sessionStateSnapshotFrom), persisted as an
+    * O(touched-users) delta segment, and served as the merge-on-read
+    * view. */
+  def sessionStateStoreCycle2(s: SparkSession, d: String, prefix: Seq[Streams.Event],
+                              batch: Seq[Streams.Event]): DataFrame = {
     import s.implicits._
     val base = sessionStateStore(s, d, prefix)
-    val name = s"sesd_${prefix.length}_${batch.length}"
     val touched = batch.map(_.user_id).distinct
-    DeltaStore.writeCycle(s, name, d, 1, {
+    DeltaStore.cycles(s, s"sesd_${prefix.length}_${batch.length}", d, base,
+        Seq("user_id"), 1) { (_, _) =>
       val init = base.filter(col("user_id").isin(touched: _*))
         .select(col("user_id").as("_1"), col("session_id").as("_2"),
           col("start_us").as("_3"), col("last_us").as("_4"), col("n").as("_5"))
         .as[(Long, Long, Long, Long, Long)]
-      graft.streaming.Streams.sessionStateSnapshotFrom(init, s.createDataset(batch))
-        .toDF("user_id", "session_id", "start_us", "last_us", "n")
-    }, base.select(col("user_id")).filter(lit(false)))
-    DeltaStore.merged(s, name, d, base, Seq("user_id"), cycles = 1)
+      (Streams.sessionStateSnapshotFrom(init, s.createDataset(batch))
+        .toDF("user_id", "session_id", "start_us", "last_us", "n"), None)
+    }
   }
 
   /** Standing LSH-bucket retained-signature state (bucket, doc_id, sig)
@@ -902,51 +794,52 @@ object Stores {
     * snapshot, bucketed by the LSH bucket key (the state shard key). Built
     * by replaying the prefix through the SAME retain-first transition the
     * stream runs (Streams.nearDedupStateSnapshot); prefix length in the
-    * cache key, as for the other stream-state stores. */
-  def nearDedupStateStore(s: SparkSession, d: String,
-                          prefix: Seq[graft.streaming.Streams.Doc]): DataFrame =
+    * name, as for the other stream-state stores. */
+  def nearDedupStateStore(s: SparkSession, d: String, prefix: Seq[Streams.Doc]): DataFrame =
     ensureBucketed(s, s"neardedup_state_${prefix.length}", d, Seq("bucket"), 32) {
       import s.implicits._
-      graft.streaming.Streams.nearDedupStateSnapshot(s.createDataset(prefix))
+      Streams.nearDedupStateSnapshot(s.createDataset(prefix))
         .toDF("bucket", "doc_id", "sig")
     }
 
   /** The near-dedup analog of [[upsertStateStoreCycle2]]: the persisted
-    * two-batch per-bucket retained-signature snapshot advanced through the
-    * next batch's docs FROM the store (Streams.nearDedupStateSnapshotFrom),
-    * persisted as an O(touched-buckets) DELTA SEGMENT (a batch only moves
+    * per-bucket retained-signature snapshot advanced through the next
+    * batch's docs FROM the store (Streams.nearDedupStateSnapshotFrom),
+    * persisted as an O(touched-buckets) delta segment (a batch only moves
     * the LSH buckets its own docs hash into — derived from the batch's
     * sketch, O(Δ)), and served as the merge-on-read view (wholesale per
     * bucket: the segment carries each touched bucket's complete new
     * retained set). */
-  def nearDedupStateStoreCycle2(s: SparkSession, d: String,
-                                prefix: Seq[graft.streaming.Streams.Doc],
-                                batch: Seq[graft.streaming.Streams.Doc]): DataFrame = {
+  def nearDedupStateStoreCycle2(s: SparkSession, d: String, prefix: Seq[Streams.Doc],
+                                batch: Seq[Streams.Doc]): DataFrame = {
     import s.implicits._
     val base = nearDedupStateStore(s, d, prefix)
-    val name = s"nddd_${prefix.length}_${batch.length}"
-    DeltaStore.writeCycle(s, name, d, 1, {
+    DeltaStore.cycles(s, s"nddd_${prefix.length}_${batch.length}", d, base,
+        Seq("bucket"), 1) { (_, _) =>
       val batchDs = s.createDataset(batch)
-      val touched = graft.streaming.Streams.nearDedupStateSnapshot(batchDs)
+      val touched = Streams.nearDedupStateSnapshot(batchDs)
         .toDF("bucket", "doc_id", "sig").select(col("bucket")).distinct()
       val init = base.join(broadcast(touched), Seq("bucket"), "left_semi")
         .select(col("bucket"), col("doc_id"), col("sig"))
         .as[(String, Long, Array[Long])]
-      graft.streaming.Streams.nearDedupStateSnapshotFrom(init, batchDs)
-        .toDF("bucket", "doc_id", "sig")
-    }, base.select(col("bucket")).filter(lit(false)))
-    DeltaStore.merged(s, name, d, base, Seq("bucket"), cycles = 1)
+      (Streams.nearDedupStateSnapshotFrom(init, batchDs)
+        .toDF("bucket", "doc_id", "sig"), None)
+    }
   }
 
   // ---- ann: IVF inverted-file store ----------------------------------------
 
+  /** Coarse cells of every IVF store; also its bucket count, so a
+    * probed-cell restriction maps 1:1 onto bucket pruning. Part of the
+    * table names of the IVF delta stores. */
+  private val IvfCells = 16
+
   /** Standing IVF inverted file (vec_id, embedding, cell) under the frozen
     * deterministic quantizer, bucketed by cell — the artifact layout every
-    * billion-vector IVF deployment persists. Bucket count = nCells so a
-    * probed-cell restriction maps 1:1 onto bucket pruning. */
-  def ivfIndexStore(s: SparkSession, d: String, nCells: Int = 16): DataFrame =
-    ensureBucketed(s, "ivf_idx", d, Seq("cell"), nCells) {
-      Dedup.ivfIndexFull(Tables.embeddings(s, d), nCells)
+    * billion-vector IVF deployment persists. */
+  def ivfIndexStore(s: SparkSession, d: String): DataFrame =
+    ensureBucketed(s, "ivf_idx", d, Seq("cell"), IvfCells) {
+      Dedup.ivfIndexFull(Tables.embeddings(s, d), IvfCells)
     }
 
   /** Read-path IVF search: probes fetch their standing cells from the
@@ -954,100 +847,53 @@ object Stores {
     * IN on the bucket column → SelectedBucketsCount in the scan) — the
     * per-call full-corpus assignment pass of the inline ann_ivf is gone.
     * Same oracle as ann_ivf. */
-  def annIvfStore(s: SparkSession, d: String, nProbes: Int = 10, k: Int = 3): DataFrame =
-    Dedup.ivfSearchFromIndex(ivfIndexStore(s, d), nProbes, k)
+  def annIvfStore(s: SparkSession, d: String): DataFrame =
+    Dedup.ivfSearchFromIndex(ivfIndexStore(s, d))
 
   /** Read-path IVF delete: keyed drop of the departing ids from the
     * persisted inverted file (broadcast anti-join — frozen quantizer, no
     * re-assignment) + cell-local search with the surviving probes. Same
     * oracle as ivf_delete. */
-  def ivfDeleteStore(s: SparkSession, d: String, nProbes: Int = 10, k: Int = 3): DataFrame = {
-    val delIds = Tables.embeddings(s, d)
-      .filter(pmod(col("vec_id"), lit(10L)) === 0L).select(col("vec_id"))
-    Dedup.ivfDeleteFrom(ivfIndexStore(s, d), delIds, nProbes, k)
+  def ivfDeleteStore(s: SparkSession, d: String): DataFrame = {
+    val delIds = Tables.embeddings(s, d).filter(isDeltaVec).select(col("vec_id"))
+    Dedup.ivfDeleteFrom(ivfIndexStore(s, d), delIds)
   }
 
-  // ---- ann: IVF WRITE-BACK cycle (append-delta segments) -------------------
+  // ---- ann: IVF WRITE-BACK cycles (append-delta segments) ------------------
 
-  /** The two-cycle BASE inverted file (vec_id %20 ∉ {0,10} under the
-    * frozen quantizer), cell-bucketed — the ingest-time base SEGMENT of
-    * the IVF delta store. nCells is part of the snapshot identity (the
-    * r13 ivfPqCodesStore advice). */
-  private def ivfDeltaBase(s: SparkSession, d: String, nCells: Int): DataFrame =
-    ensureBucketed(s, s"ivfd_base$nCells", d, Seq("cell"), nCells) {
+  /** An `n`-cycle IVF delta store `name` over residues mod `mod`: the base
+    * segment is the cell-bucketed inverted file of the vectors outside
+    * every arrival class; each cycle appends the arrivals assigned under
+    * the frozen quantizer + the departure tombstones. Returns (base,
+    * merged view). */
+  private def ivfCycles(s: SparkSession, d: String, name: String, mod: Long,
+                        n: Int): (DataFrame, DataFrame) = {
+    val base = ensureBucketed(s, s"${name}_base$IvfCells", d, Seq("cell"), IvfCells) {
       val emb = Tables.embeddings(s, d)
-      Dedup.ivfAssign(emb.filter(!vCyc(0L) && !vCyc(10L)),
-        Dedup.frozenCents(emb, nCells))
+      Dedup.ivfAssign(emb.filter(preArrival(mod, n)), Dedup.frozenCents(emb, IvfCells))
     }
-
-  /** Both maintenance cycles written as O(Δ) DELTA SEGMENTS (the r14
-    * verdict's top item: the cycle-1 write was a full cell-bucketed
-    * overwrite of the maintained index — O(index) write I/O per cycle).
-    * Assignment is a pure per-vector function of the frozen model, so a
-    * cycle's segment is exactly (assigned arrivals, departure ids) —
-    * nothing standing is re-assigned OR re-written. */
-  private def ensureIvfDeltas(s: SparkSession, d: String, nCells: Int): Unit = {
     val emb = Tables.embeddings(s, d)
-    lazy val cents = Dedup.frozenCents(emb, nCells)
-    DeltaStore.writeCycle(s, s"ivfd$nCells", d, 1,
-      Dedup.ivfAssign(emb.filter(vCyc(0L)), cents),
-      emb.filter(vCyc(5L)).select(col("vec_id")))
-    DeltaStore.writeCycle(s, s"ivfd$nCells", d, 2,
-      Dedup.ivfAssign(emb.filter(vCyc(10L)), cents),
-      emb.filter(vCyc(15L)).select(col("vec_id")))
+    lazy val cents = Dedup.frozenCents(emb, IvfCells)
+    (base, vectorCycles(s, d, s"$name$IvfCells", base, emb, mod, n)(Dedup.ivfAssign(_, cents)))
   }
 
   /** The composed TWO-CYCLE maintained IVF search over the DELTA store:
-    * cycle 1 and cycle 2 each persist an O(Δ) segment (arrivals
-    * %20 ∈ {0, 10} upserted, departures %20 ∈ {5, 15} tombstoned) and the
-    * search serves from the merge-on-read view — per-cycle write I/O no
-    * longer scales with index size. Oracle UNCHANGED (ivfCycle2Sql):
-    * cell-local search over the post-both-batches corpus under the same
-    * frozen quantizer — the hash gate proves the segment fold lossless. */
-  def ivfCycle2Store(s: SparkSession, d: String, nCells: Int = 16,
-                     nProbes: Int = 10, k: Int = 3): DataFrame = {
-    ensureIvfDeltas(s, d, nCells)
-    Dedup.ivfSearchFromIndex(
-      DeltaStore.merged(s, s"ivfd$nCells", d, ivfDeltaBase(s, d, nCells),
-        Seq("vec_id"), cycles = 2),
-      nProbes, k)
-  }
+    * arrivals %20 ∈ {0, 10} upserted, departures %20 ∈ {5, 15}
+    * tombstoned, each cycle an O(Δ) segment, and the search serves from
+    * the merge-on-read view. Oracle UNCHANGED (ivfCycle2Sql): cell-local
+    * search over the post-both-batches corpus under the same frozen
+    * quantizer — the hash gate proves the segment fold lossless. */
+  def ivfCycle2Store(s: SparkSession, d: String): DataFrame =
+    Dedup.ivfSearchFromIndex(ivfCycles(s, d, "ivfd", 20L, 2)._2)
 
   /** The FOUR-CYCLE delta store — the segment list past cycle 2, the
-    * regime the compaction cadence exists for: base = vec_id %40 ∉
-    * arrivals {0,10,20,30}; cycles i = 1..4 each append (assigned
-    * arrival batch 10(i−1), departure tombstones 10(i−1)+5) and the
-    * search folds FOUR segments merge-on-read. Oracle = frozen-model
-    * cell-local search over the %40 survivors (ivfCycle4Sql) — hash
-    * equality proves the longer fold stays lossless. */
-  private def a40(r: Long) = pmod(col("vec_id"), lit(40L)) === r
-
-  private def ivfDelta4Base(s: SparkSession, d: String, nCells: Int): DataFrame =
-    ensureBucketed(s, s"ivfq_base$nCells", d, Seq("cell"), nCells) {
-      val emb = Tables.embeddings(s, d)
-      Dedup.ivfAssign(
-        emb.filter(!a40(0L) && !a40(10L) && !a40(20L) && !a40(30L)),
-        Dedup.frozenCents(emb, nCells))
-    }
-
-  private def ensureIvfDeltas4(s: SparkSession, d: String, nCells: Int): Unit = {
-    val emb = Tables.embeddings(s, d)
-    lazy val cents = Dedup.frozenCents(emb, nCells)
-    (1 to 4).foreach { i =>
-      DeltaStore.writeCycle(s, s"ivfq$nCells", d, i,
-        Dedup.ivfAssign(emb.filter(a40(10L * (i - 1))), cents),
-        emb.filter(a40(10L * (i - 1) + 5L)).select(col("vec_id")))
-    }
-  }
-
-  def ivfCycle4Store(s: SparkSession, d: String, nCells: Int = 16,
-                     nProbes: Int = 10, k: Int = 3): DataFrame = {
-    ensureIvfDeltas4(s, d, nCells)
-    Dedup.ivfSearchFromIndex(
-      DeltaStore.merged(s, s"ivfq$nCells", d, ivfDelta4Base(s, d, nCells),
-        Seq("vec_id"), cycles = 4),
-      nProbes, k)
-  }
+    * regime the compaction cadence exists for: cycles i = 1..4 append
+    * arrival batch vec_id %40 == 10(i−1) and departure tombstones
+    * 10(i−1)+5, and the search folds FOUR segments merge-on-read. Oracle =
+    * frozen-model cell-local search over the %40 survivors (ivfCycle4Sql)
+    * — hash equality proves the longer fold stays lossless. */
+  def ivfCycle4Store(s: SparkSession, d: String): DataFrame =
+    Dedup.ivfSearchFromIndex(ivfCycles(s, d, "ivfq", 40L, 4)._2)
 
   /** The four-cycle IVF delta store's SEGMENT MANIFEST — the catalog
     * metadata a compaction scheduler bins (compaction_plan's input
@@ -1055,11 +901,9 @@ object Stores {
     * corresponding %40 batch classes straight from the corpus — hash
     * equality proves the landed segments carry exactly the batch
     * algebra (a missing tombstone or double-written upsert breaks it). */
-  def ivfSegmentManifest(s: SparkSession, d: String, nCells: Int = 16): DataFrame = {
-    ensureIvfDeltas4(s, d, nCells)
-    DeltaStore.manifest(s, s"ivfq$nCells", d, ivfDelta4Base(s, d, nCells),
+  def ivfSegmentManifest(s: SparkSession, d: String): DataFrame =
+    DeltaStore.manifest(s, s"ivfq$IvfCells", d, ivfCycles(s, d, "ivfq", 40L, 4)._1,
       cycles = 4)
-  }
 
   /** COMPACTION rung of the IVF delta store — the scheduled OPTIMIZE job:
     * fold base + both delta segments into one fresh cell-bucketed base
@@ -1067,24 +911,14 @@ object Stores {
     * (the fold is value-preserving by construction; the hash gate proves
     * it), so compaction can run on any cadence without a correctness
     * risk. */
-  def ivfCompactStore(s: SparkSession, d: String, nCells: Int = 16,
-                      nProbes: Int = 10, k: Int = 3): DataFrame = {
-    ensureIvfDeltas(s, d, nCells)
+  def ivfCompactStore(s: SparkSession, d: String): DataFrame = {
+    val view = ivfCycles(s, d, "ivfd", 20L, 2)._2
     Dedup.ivfSearchFromIndex(
-      DeltaStore.compact(s, s"ivfd$nCells", d, ivfDeltaBase(s, d, nCells),
-        Seq("vec_id"), cycles = 2, Seq("cell"), nCells),
-      nProbes, k)
+      DeltaStore.compact(s, s"ivfd$IvfCells", d, 2, Seq("cell"), IvfCells, view))
   }
 
-  /** The PERSISTED frozen IVF-PQ model — coarse centroids + residual
-    * codebooks as two tiny catalog tables written ONCE per corpus
-    * snapshot next to the codes store (the FAISS index header: the model
-    * travels with the codes). Every PQ store read path loads these
-    * bounded tables instead of re-deriving the model from the corpus
-    * relation per call — the r14 weak grade's root cause (the delete
-    * rung's 'only the delta ids move' claim was paying an O(corpus)
-    * model pass per invocation). nCells is part of the snapshot
-    * identity, like the codes stores. */
+  // ---- ann: IVF-PQ store ----------------------------------------------------
+
   /** Per-JVM memo of the loaded model arrays — the model is an immutable
     * pure function of the snapshot, so repeated serving calls skip the
     * two (tiny but job-scheduling-priced) table collects; a real
@@ -1095,41 +929,38 @@ object Stores {
 
   /** Drop every per-JVM memo (currently: the loaded PQ model). Called by
     * the bench's between-query sweep so nothing survives a rep boundary —
-    * the harness invariant the memo silently violated (r15 verdict item 6:
-    * rep 1 paid the two model-load collects, reps 2-3 reported the
-    * memoized number). Serving-process semantics are unchanged — callers
-    * outside the bench never clear it. */
+    * otherwise rep 1 pays the two model-load collects and later reps
+    * report the memoized number. Serving-process semantics are unchanged —
+    * callers outside the bench never clear it. */
   def clearSessionMemos(): Unit = ipqModelCache.clear()
 
-  def ivfPqModelStore(s: SparkSession, d: String, nCells: Int = 16,
-                      m: Int = 32, nCodes: Int = 128): ProductQuant.PqModel =
-    synchronized {
-      val tc = s"graft_store_ipq_cents${nCells}_${tag(d)}"
-      val tb = s"graft_store_ipq_cbs${nCells}_${tag(d)}"
-      if (!s.catalog.tableExists(tc) || !s.catalog.tableExists(tb)) {
-        ipqModelCache.remove(tc)
-        val model = ProductQuant.ivfPqModel(Tables.embeddings(s, d), nCells, m, nCodes)
-        val (centsDf, cbsDf) = ProductQuant.modelToTables(s, model)
-        dropStaleLocation(s, tc)
-        centsDf.write.mode("overwrite").saveAsTable(tc)
-        dropStaleLocation(s, tb)
-        cbsDf.write.mode("overwrite").saveAsTable(tb)
-      }
-      ipqModelCache.computeIfAbsent(tc,
-        _ => ProductQuant.modelFromTables(s.table(tc), s.table(tb)))
+  /** The PERSISTED frozen IVF-PQ model (m = 32 sub-quantizers, 128
+    * training codes) — coarse centroids + residual codebooks as two tiny
+    * catalog tables written ONCE per corpus snapshot next to the codes
+    * store (the FAISS index header: the model travels with the codes).
+    * Every PQ store read path loads these bounded tables instead of
+    * re-deriving the model from the corpus relation per call. Rebuilding
+    * either table drops the memo. */
+  def ivfPqModelStore(s: SparkSession, d: String): ProductQuant.PqModel = synchronized {
+    val key = tableName(s"ipq_cents$IvfCells", d)
+    lazy val tables = {
+      ipqModelCache.remove(key)
+      ProductQuant.modelToTables(s,
+        ProductQuant.ivfPqModel(Tables.embeddings(s, d), IvfCells, m = 32, nCodes = 128))
     }
+    val cents = ensureTable(s, s"ipq_cents$IvfCells", d)(tables._1)
+    val cbs = ensureTable(s, s"ipq_cbs$IvfCells", d)(tables._2)
+    ipqModelCache.computeIfAbsent(key, _ => ProductQuant.modelFromTables(cents, cbs))
+  }
 
   /** Standing IVF-PQ codes (vec_id, cell, codes) bucketed by cell — the
     * FAISS IndexIVFPQ persisted layout: m small codes per vector instead
     * of Dim floats. Encoded once per corpus snapshot, under the PERSISTED
     * frozen model (the one model derivation at ingest). */
-  def ivfPqCodesStore(s: SparkSession, d: String, nCells: Int = 16): DataFrame =
-    ensureBucketed(s, "ivfpq_codes", d, Seq("cell"), nCells) {
-      // nCells threads through to the index build (r13 advice: bucket
-      // count and quantizer cell domain must agree by construction)
+  def ivfPqCodesStore(s: SparkSession, d: String): DataFrame =
+    ensureBucketed(s, "ivfpq_codes", d, Seq("cell"), IvfCells) {
       val emb = Tables.embeddings(s, d)
-      ProductQuant.ivfPqEncodeSlice(emb, emb, nCells,
-        model = Some(ivfPqModelStore(s, d, nCells)))
+      ProductQuant.ivfPqEncodeSlice(emb, emb, IvfCells, model = Some(ivfPqModelStore(s, d)))
     }
 
   /** Read-path IVF-PQ search: ADC scoring over the persisted codes of the
@@ -1142,14 +973,11 @@ object Stores {
 
   /** The BASE-slice persisted IVF-PQ codes (vec_id%10 != 0 encoded under
     * the frozen model) — the standing artifact of the upsert rung. */
-  def ivfPqCodesBase(s: SparkSession, d: String, nCells: Int = 16): DataFrame =
-    // nCells is part of the snapshot identity (the r13 ivfPqCodesStore
-    // advice class): a different cell count must build its own store
-    ensureBucketed(s, s"ivfpq_codes_base$nCells", d, Seq("cell"), nCells) {
+  def ivfPqCodesBase(s: SparkSession, d: String): DataFrame =
+    ensureBucketed(s, s"ivfpq_codes_base$IvfCells", d, Seq("cell"), IvfCells) {
       val emb = Tables.embeddings(s, d)
-      ProductQuant.ivfPqEncodeSlice(
-        emb.filter(pmod(col("vec_id"), lit(10L)) =!= 0L), emb, nCells,
-        model = Some(ivfPqModelStore(s, d, nCells)))
+      ProductQuant.ivfPqEncodeSlice(emb.filter(!isDeltaVec), emb, IvfCells,
+        model = Some(ivfPqModelStore(s, d)))
     }
 
   /** Read-path IVF-PQ upsert: the arrival batch encoded in one narrow
@@ -1157,76 +985,48 @@ object Stores {
     * the call — no model re-derivation) and appended to the PERSISTED
     * base codes; ADC search served from the union. Same oracle as
     * ivf_pq_upsert / ann_ivf_pq. */
-  def ivfPqUpsertStore(s: SparkSession, d: String, nProbes: Int = 10,
-                       k: Int = 3): DataFrame = {
+  def ivfPqUpsertStore(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val model = ivfPqModelStore(s, d)
-    val arr = ProductQuant.ivfPqEncodeSlice(
-      emb.filter(pmod(col("vec_id"), lit(10L)) === 0L), emb,
+    val arr = ProductQuant.ivfPqEncodeSlice(emb.filter(isDeltaVec), emb,
       model = Some(model))
-    ProductQuant.ivfPqSearchFromCodes(emb,
-      ivfPqCodesBase(s, d).unionByName(arr), nProbes = nProbes, k = k,
+    ProductQuant.ivfPqSearchFromCodes(emb, ivfPqCodesBase(s, d).unionByName(arr),
       model = Some(model))
   }
 
   /** Read-path IVF-PQ delete: keyed drop of the departing ids from the
     * PERSISTED codes table (broadcast anti-join), ADC search with the
-    * surviving probes under the PERSISTED frozen model — the per-call
-    * corpus encode pass AND the per-call model derivation are both gone;
-    * only the delta ids move. Same oracle as ivf_pq_delete. */
-  def ivfPqDeleteStore(s: SparkSession, d: String, nProbes: Int = 10,
-                       k: Int = 3): DataFrame = {
+    * surviving probes under the PERSISTED frozen model — no per-call
+    * corpus encode pass or model derivation; only the delta ids move.
+    * Same oracle as ivf_pq_delete. */
+  def ivfPqDeleteStore(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val delIds = emb.filter(pmod(col("vec_id"), lit(10L)) === 0L)
-      .select(col("vec_id"))
+    val delIds = emb.filter(isDeltaVec).select(col("vec_id"))
     ProductQuant.ivfPqDeleteFrom(emb, ivfPqCodesStore(s, d), delIds,
-      nProbes = nProbes, k = k, model = Some(ivfPqModelStore(s, d)))
-  }
-
-  // ---- ann: IVF-PQ WRITE-BACK cycle (append-delta segments) ----------------
-
-  /** The two-cycle BASE codes table (vec_id %20 ∉ {0,10} encoded under
-    * the PERSISTED frozen model), cell-bucketed — the ingest-time base
-    * SEGMENT of the IVF-PQ delta store. */
-  private def ivfPqDeltaBase(s: SparkSession, d: String, nCells: Int): DataFrame =
-    ensureBucketed(s, s"ipqd_base$nCells", d, Seq("cell"), nCells) {
-      val emb = Tables.embeddings(s, d)
-      ProductQuant.ivfPqEncodeSlice(emb.filter(!vCyc(0L) && !vCyc(10L)), emb,
-        nCells, model = Some(ivfPqModelStore(s, d, nCells)))
-    }
-
-  /** Both IVF-PQ maintenance cycles as O(Δ) DELTA SEGMENTS: codes are
-    * pure per-vector functions of the frozen model, so a cycle's segment
-    * is exactly (encoded arrivals, departure ids) — nothing standing is
-    * re-encoded or re-written (the r14 shape wrote the full maintained
-    * codes table back per cycle). */
-  private def ensureIvfPqDeltas(s: SparkSession, d: String, nCells: Int): Unit = {
-    val emb = Tables.embeddings(s, d)
-    lazy val model = Some(ivfPqModelStore(s, d, nCells))
-    DeltaStore.writeCycle(s, s"ipqd$nCells", d, 1,
-      ProductQuant.ivfPqEncodeSlice(emb.filter(vCyc(0L)), emb, nCells, model = model),
-      emb.filter(vCyc(5L)).select(col("vec_id")))
-    DeltaStore.writeCycle(s, s"ipqd$nCells", d, 2,
-      ProductQuant.ivfPqEncodeSlice(emb.filter(vCyc(10L)), emb, nCells, model = model),
-      emb.filter(vCyc(15L)).select(col("vec_id")))
+      model = Some(ivfPqModelStore(s, d)))
   }
 
   /** The composed TWO-CYCLE maintained IVF-PQ search over the DELTA
-    * store: each cycle persists an O(Δ) segment; ADC search (persisted
-    * frozen model, surviving probes) serves from the merge-on-read view —
-    * per-cycle write I/O no longer scales with index size. Oracle
-    * UNCHANGED: the frozen-model ADC replay over the post-both-batches
-    * corpus (ivfPqSearchSql with the %20 survivor restriction). */
-  def ivfPqCycle2Store(s: SparkSession, d: String, nCells: Int = 16,
-                       nProbes: Int = 10, k: Int = 3): DataFrame = {
-    ensureIvfPqDeltas(s, d, nCells)
+    * store: the base segment is the codes of vec_id %20 ∉ {0, 10} under
+    * the PERSISTED frozen model; each cycle persists (encoded arrivals,
+    * departure ids); ADC search (surviving probes) serves from the
+    * merge-on-read view. Oracle UNCHANGED: the frozen-model ADC replay
+    * over the post-both-batches corpus (ivfPqSearchSql with the %20
+    * survivor restriction). */
+  def ivfPqCycle2Store(s: SparkSession, d: String): DataFrame = {
+    val base = ensureBucketed(s, s"ipqd_base$IvfCells", d, Seq("cell"), IvfCells) {
+      val emb = Tables.embeddings(s, d)
+      ProductQuant.ivfPqEncodeSlice(emb.filter(preArrival(20L, 2)), emb, IvfCells,
+        model = Some(ivfPqModelStore(s, d)))
+    }
+    val cycleEmb = Tables.embeddings(s, d)
+    lazy val model = Some(ivfPqModelStore(s, d))
+    val merged = vectorCycles(s, d, s"ipqd$IvfCells", base, cycleEmb, 20L, 2)(
+      ProductQuant.ivfPqEncodeSlice(_, cycleEmb, IvfCells, model = model))
     val emb = Tables.embeddings(s, d)
-    val merged = DeltaStore.merged(s, s"ipqd$nCells", d,
-      ivfPqDeltaBase(s, d, nCells), Seq("vec_id"), cycles = 2)
     // the view already excludes both departure batches; the empty delete
     // list keeps the shared surviving-probe derivation of ivfPqDeleteFrom
-    ProductQuant.ivfPqDeleteFrom(emb, merged,
-      emb.filter(lit(false)).select(col("vec_id")), nCells,
-      nProbes = nProbes, k = k, model = Some(ivfPqModelStore(s, d, nCells)))
+    ProductQuant.ivfPqDeleteFrom(emb, merged, emb.filter(lit(false)).select(col("vec_id")),
+      IvfCells, model = Some(ivfPqModelStore(s, d)))
   }
 }

@@ -4,13 +4,15 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.DeltaStore
 
-/** Pins the r16 constant-depth DeltaStore.merged fold (single union +
-  * latest-wins winner resolution) against the sequential per-segment
-  * anti-join semantics it replaced, on every ordering edge: upsert then
+/** Pins the constant-depth DeltaStore.merged fold (single union +
+  * latest-wins winner resolution) against sequential per-segment
+  * anti-join semantics, on every ordering edge: upsert then
   * later tombstone (gone), tombstone then later upsert (back), same-cycle
   * tombstone + upsert (upsert wins — the old fold removed then re-added),
   * tombstone of a never-present pk (no-op), multi-row group pks (the
-  * LATEST cycle's full row-set wins wholesale), and untouched base rows. */
+  * LATEST cycle's full row-set wins wholesale), and untouched base rows;
+  * and pins that a store schema using a helper column name of the fold is
+  * rejected instead of silently overwritten. */
 class DeltaMergeOrderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,5 +55,23 @@ class DeltaMergeOrderSpec extends SparkSpec {
     val want1 = Set((1L, "b1"), (2L, "u1-2a"), (2L, "u1-2b"), (3L, "u1-3"),
       (5L, "b5a"), (5L, "b5b"), (6L, "b6"))
     assert(got1 == want1)
+  }
+
+  test("merged rejects a store column that collides with a merge helper") {
+    val s = spark
+    val name = "mergeorder_reserved"
+    val d = "/root/testdata/sf0.001"
+    DeltaStore.writeCycle(s, name, d, 1,
+      Seq((1L, "u1", 7)).toDF("pk", "v", "_cyc"), Seq.empty[Long].toDF("pk"))
+    val base = Seq((1L, "b1", 0), (2L, "b2", 0)).toDF("pk", "v", "_cyc")
+    val e = intercept[IllegalArgumentException] {
+      DeltaStore.merged(s, name, d, base, Seq("pk"), cycles = 1)
+    }
+    assert(e.getMessage.contains("_cyc"))
+    // case-insensitive, like the analyzer that would resolve the clash
+    intercept[IllegalArgumentException] {
+      DeltaStore.merged(s, name, d, base.withColumnRenamed("_cyc", "_TC"),
+        Seq("pk"), cycles = 1)
+    }
   }
 }

@@ -1,13 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, GraphOps}
 import graft.sources.{DeltaStore, Stores, Tables}
 
 /** The append-delta store layer (sources/DeltaStore): every write-back
-  * cycle must persist O(Δ) rows — not the O(index) full-artifact rewrite
-  * the r14 cycles paid — and the merge-on-read view must equal the
+  * cycle must persist O(Δ) rows — not an O(index) full-artifact rewrite
+  * — and the merge-on-read view must equal the
   * maintained state bit-exactly (the CORRECTNESS gate re-proves the
   * latter against DuckDB; here it is pinned structurally at sf0.001 so a
   * regression fails fast). */
@@ -135,5 +137,32 @@ class DeltaStoreSpec extends SparkSpec {
     assert(rows(viaCompact) === rows(viaMerged))
     // the compacted table is a bucketed catalog table (single segment)
     assert(s.catalog.tableExists("graft_store_ivfd16_c2__root_testdata_sf0_001"))
+  }
+
+  test("catalog-or-build: a second call rewrites no store file") {
+    val s = spark
+    val root = java.nio.file.Paths.get(
+      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    // relative path -> mtime of every file under a graft_store_* directory
+    def snapshot(): Map[String, Long] = {
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+          root.relativize(p).getName(0).toString.startsWith("graft_store_"))
+        .map(p => root.relativize(p).toString ->
+          java.nio.file.Files.getLastModifiedTime(p).toMillis)
+        .toMap
+      finally files.close()
+    }
+    def calls(): Unit = {
+      Stores.ivfCycle2Store(s, dir).count()
+      Stores.componentsCycle2Store(s, dir).count()
+    }
+    calls()
+    val before = snapshot()
+    assert(before.keys.exists(_.startsWith("graft_store_ivfd16_u2_")) &&
+      before.keys.exists(_.startsWith("graft_store_ccd_u2_")))
+    calls()
+    assert(snapshot() === before)
   }
 }
